@@ -492,9 +492,9 @@ def mega_statement_text(target_mb: int = 512, seed: int = 7) -> str:
     """A single pathological multi-hundred-MB chase-shaped statement
     (SURVEY §4 worst-case document): deterministic pseudo-random
     transaction lines with section headers and noise interleaved, page
-    breaks every 60 lines — the document that must neither OOM a 4 GB
-    Python worker nor stall its task (tools/megadoc_bench.py measures;
-    tests/test_megadoc.py pins a scaled-down bound)."""
+    breaks every 60 lines — the document that must not OOM a 4 GB
+    Python worker (tools/megadoc_bench.py measures; tests/test_megadoc.py
+    pins a scaled-down bound on the pipeline worker)."""
     import random
 
     rng = random.Random(seed)

@@ -4,18 +4,20 @@ One pathological multi-hundred-MB document lands in ONE Python worker
 under the normal pipeline.  Measured bound (tools/megadoc_bench.py,
 BENCH/MEGADOC.md): the whole-document engine path costs ~13.6 MB RSS
 per MB of document — a 4 GB worker tops out near a 290 MB document and
-a 512 MB one both OOMs and stalls its task for minutes.  Two fixes:
+a 512 MB one both OOMs and stalls its task for minutes.  The memory
+fix:
 
 * ``parse_document_columnar`` — same worker, bounded memory: the line
   list is parsed in chunks whose boundaries are PROVABLY safe split
   points, per-chunk record dicts are folded into columnar arrays (with
   date/direction interning) immediately, and one global stable
   date-sort reproduces ``finalize_records`` order exactly.
-* ``parse_pages_mega`` — bounded memory AND wall: oversized payloads
-  are extracted once, their line arrays exploded into chunk ROWS that
-  shuffle across the cluster, each chunk parsed in its own task, and
-  transaction order re-established by a window (date, chunk, emission)
-  — the stable-sort key the engine uses, so output is byte-identical.
+* the pipeline worker (``pipeline._parse_arrow_batches``) parses EVERY
+  document through ``parse_document_columnar``, so chunking engages
+  automatically above ``DEFAULT_CHUNK_LINES`` decoded lines — routed on
+  decoded text size, not payload size, with nothing routed by hand.
+  One giant document still parses inside one task (memory bounded,
+  wall not); BENCH/MEGADOC.md keeps the measured numbers.
 
 Why chunking at block-opening date lines is EXACT for the date-sweep
 family (generic/ifb/pnb/mercury/valley — engine/banks._date_block_sweep):
@@ -43,13 +45,7 @@ no bank remains on the whole-document-only path.
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from typing import List, Optional, Tuple
 
 from .engine.banks import (
     ALL_PARSERS, TRUIST_SECTION_IN, TRUIST_SECTION_OUT, WF_NOISE,
@@ -260,12 +256,15 @@ class _Columnar:
 
     def extend_raw(self, records) -> None:
         for rec in records:
-            desc = rec.get("description", "").strip()
+            # finalize_records order: direction is classified on the
+            # RAW description, before the strip
+            amount = abs(float(rec["amount"]))
+            desc = rec.get("description", "")
+            direction = rec.get("direction") or classify_direction(desc)
             self.dates.append(self._i(rec["date"]))
-            self.descs.append(desc)
-            self.amounts.append(abs(float(rec["amount"])))
-            self.dirs.append(self._i(
-                rec.get("direction") or classify_direction(desc)))
+            self.descs.append(desc.strip())
+            self.amounts.append(amount)
+            self.dirs.append(self._i(direction))
 
     def finalized(self):
         order = sorted(range(len(self.dates)),
@@ -303,184 +302,3 @@ def parse_document_columnar(
     else:
         out.extend_raw(parse_fn(lines, year, tally))
     return key, out.finalized()
-
-
-# ------------------------------------------------------ distributed path
-CHUNK_SCHEMA = (
-    "url string, chunk_no int, prefix string, chunk_text string,"
-    " year int, bank string"
-)
-DOCSKEL_SCHEMA = (
-    "url string, bank string, kind string, pages int, n_lines int,"
-    " n_chars bigint, text_sha256 string, error string"
-)
-CHUNK_TX_SCHEMA = (
-    "url string, chunk_no int, within_no int, date string,"
-    " description string, amount double, direction string,"
-    " blocks_total int, blocks_kept int"
-)
-
-
-def _phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Oversized payloads → extracted text → safe chunk rows (plus one
-    doc-skeleton row carried in the same union via chunk_no = -1,
-    prefix = lineage json-ish fields packed into chunk_text)."""
-    from .pdfio.extract import extract_document
-
-    for pdf_batch in batches:
-        rows = {k: [] for k in ("url", "chunk_no", "prefix",
-                                "chunk_text", "year", "bank")}
-        for row in pdf_batch.itertuples(index=False):
-            payload = row.html
-            if payload is not None:
-                doc = extract_document(bytes(payload))
-                text, kind, pages, error = (doc.text, doc.kind,
-                                            doc.pages, doc.error)
-            else:
-                text, kind, pages, error = row.text, "text", 1, None
-            year = (row.warc_ts.year if pd.notna(row.warc_ts) else 1970)
-            year = year_of(text, year)
-            bank = detect_issuer(text)
-            lines = split_lines(text)
-            skel = "%s\x01%d\x01%d\x01%d\x01%s\x01%s" % (
-                kind, pages, len(lines), len(text),
-                hashlib.sha256(text.encode("utf-8")).hexdigest(),
-                error or "")
-            rows["url"].append(row.url)
-            rows["chunk_no"].append(-1)
-            rows["prefix"].append("")
-            rows["chunk_text"].append(skel)
-            rows["year"].append(year)
-            rows["bank"].append(bank or "")
-            key = bank if bank in CHUNKABLE else "__whole__"
-            spans = (chunk_spans(lines, year, bank)
-                     if key != "__whole__" else [(0, len(lines), None)])
-            for no, (start, end, carried) in enumerate(spans):
-                rows["url"].append(row.url)
-                rows["chunk_no"].append(no)
-                rows["prefix"].append(carried or "")
-                rows["chunk_text"].append("\n".join(lines[start:end]))
-                rows["year"].append(year)
-                rows["bank"].append(bank or "")
-        yield pd.DataFrame(rows)
-
-
-def _phase2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """One chunk row → raw-parsed transactions (pre-sort; global order
-    restored by the window downstream) + the chunk's tally counters on
-    every row (aggregated later)."""
-    for pdf_batch in batches:
-        out = {k: [] for k in ("url", "chunk_no", "within_no", "date",
-                               "description", "amount", "direction",
-                               "blocks_total", "blocks_kept")}
-        for row in pdf_batch.itertuples(index=False):
-            parse_fn = ALL_PARSERS.get(row.bank or None) or parse_generic
-            lines = row.chunk_text.split("\n") if row.chunk_text else []
-            if row.prefix:
-                lines = [row.prefix] + lines
-            tally: dict = {}
-            recs = parse_fn(lines, int(row.year), tally)
-            for w, rec in enumerate(recs):
-                desc = rec.get("description", "").strip()
-                out["url"].append(row.url)
-                out["chunk_no"].append(row.chunk_no)
-                out["within_no"].append(w)
-                out["date"].append(rec["date"])
-                out["description"].append(desc)
-                out["amount"].append(abs(float(rec["amount"])))
-                out["direction"].append(
-                    rec.get("direction") or classify_direction(desc))
-                out["blocks_total"].append(
-                    tally.get("blocks_total", 0) if w == 0 else 0)
-                out["blocks_kept"].append(
-                    tally.get("blocks_kept", 0) if w == 0 else 0)
-            if not recs:  # keep the tally even for empty chunks
-                out["url"].append(row.url)
-                out["chunk_no"].append(row.chunk_no)
-                out["within_no"].append(-1)
-                out["date"].append(None)
-                out["description"].append(None)
-                out["amount"].append(None)
-                out["direction"].append(None)
-                out["blocks_total"].append(tally.get("blocks_total", 0))
-                out["blocks_kept"].append(tally.get("blocks_kept", 0))
-        yield pd.DataFrame(out)
-
-
-# persisted intermediates of parse_pages_mega runs, released by
-# release_mega_cache() (executor storage would otherwise accumulate
-# across repeated calls — ADVICE r4)
-_MEGA_CACHE: list = []
-
-
-def release_mega_cache() -> None:
-    """Unpersist every intermediate cached by parse_pages_mega.  Call
-    after the returned DataFrames are materialized (written/collected);
-    lazy references held past this point recompute instead of reading
-    cache."""
-    while _MEGA_CACHE:
-        _MEGA_CACHE.pop().unpersist()
-
-
-def parse_pages_mega(pages: DataFrame,
-                     partitions: Optional[int] = None,
-                     ) -> tuple[DataFrame, DataFrame]:
-    """Mega-document pipeline: (transactions, doc_metrics) for a pages
-    DataFrame whose documents may individually exceed one worker.  The
-    chunk explosion is the ONE payload shuffle; each chunk parses in
-    its own task, so the straggler is bounded by chunk size instead of
-    document size.  Output order/content matches the engine exactly:
-    the window's (date, chunk_no, within_no) key IS finalize_records'
-    stable date-sort."""
-    spark = pages.sparkSession
-    partitions = partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
-    pruned = pages.select("url", "warc_ts", "html", "text")
-    chunks = pruned.mapInPandas(_phase1, schema=CHUNK_SCHEMA)
-    chunks = chunks.repartition(partitions * 2, "url", "chunk_no")
-    # persist BOTH intermediates (ADVICE r4): chunks feeds three
-    # consumers (phase-2 parse, the bank join, the doc skeleton) across
-    # the two returned DataFrames' separate actions — without this the
-    # expensive _phase1 payload extraction reruns per action.  Tracked
-    # in _MEGA_CACHE; callers release via release_mega_cache() once the
-    # returned DataFrames are materialized.
-    chunks = chunks.persist()
-    _MEGA_CACHE.append(chunks)
-
-    parsed = chunks.filter(F.col("chunk_no") >= 0) \
-        .mapInPandas(_phase2, schema=CHUNK_TX_SCHEMA)
-    parsed = parsed.persist()
-    _MEGA_CACHE.append(parsed)
-
-    w = Window.partitionBy("url").orderBy("date", "chunk_no", "within_no")
-    txs = (parsed.filter(F.col("within_no") >= 0)
-           .withColumn("tx_index",
-                       (F.row_number().over(w) - 1).cast("int"))
-           .join(chunks.filter(F.col("chunk_no") == -1)
-                 .select("url", "bank"), "url")
-           .select("url", "tx_index", "bank", "date", "description",
-                   "amount", "direction"))
-
-    tallies = parsed.groupBy("url").agg(
-        F.sum("blocks_total").cast("int").alias("blocks_total"),
-        F.sum("blocks_kept").cast("int").alias("blocks_kept"),
-        F.sum(F.when(F.col("within_no") >= 0, 1).otherwise(0))
-        .cast("int").alias("tx_count"))
-    skel = chunks.filter(F.col("chunk_no") == -1).select(
-        "url", "bank",
-        F.split("chunk_text", "\x01").alias("s"))
-    docs = (skel.select(
-        "url", "bank",
-        F.col("s")[0].alias("kind"),
-        F.col("s")[1].cast("int").alias("pages"),
-        F.col("s")[2].cast("int").alias("n_lines"),
-        F.col("s")[3].cast("bigint").alias("n_chars"),
-        F.col("s")[4].alias("text_sha256"),
-        F.nullif(F.col("s")[5], F.lit("")).alias("error"))
-        .join(tallies, "url", "left")
-        .select("url", "bank", "kind", "pages", "n_lines", "n_chars",
-                F.coalesce("blocks_total", F.lit(0)).alias("blocks_total"),
-                F.coalesce("blocks_kept", F.lit(0)).alias("blocks_kept"),
-                F.coalesce("tx_count", F.lit(0)).alias("tx_count"),
-                "text_sha256", "error"))
-    return txs, docs

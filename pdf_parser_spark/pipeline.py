@@ -2,8 +2,8 @@
 table + lineage sidecar.
 
     scan(url, warc_ts, html, text, lang)
-      → salted skew-aware repartition                 (one shuffle)
-      → mapInPandas extract+detect+parse              (Arrow batches)
+      → salted url-hash repartition                   (one shuffle)
+      → mapInArrow extract+detect+parse+sha256        (Arrow batches)
       → split: transactions / per-document metrics    (one cached pass)
       → snapshot-committed append (io_tables.TableIO: parquet+manifest
         here, Iceberg on a real cluster)
@@ -11,13 +11,16 @@ table + lineage sidecar.
 Design notes (SURVEY.md §4, BASELINE north star):
 * Extraction and parsing happen in ONE pass over the payload — the
   reference parses every PDF twice (app.py:13 + chase.py:17); we don't.
-* No per-row Python UDFs anywhere: the per-document state machines run
-  inside ``mapInPandas`` over Arrow record batches.
+* No per-row Python UDFs anywhere: one per-document worker,
+  ``_parse_arrow_batches``, runs inside ``mapInArrow`` and emits
+  RecordBatches.  It parses through ``megadoc.parse_document_columnar``,
+  which returns columns and chunks any document above
+  ``megadoc.DEFAULT_CHUNK_LINES`` decoded lines at provably exact split
+  points — so a giant document keeps the worker's memory bounded with
+  no routing by hand.
 * Skew: documents vary 1000× in size, and one task gets many documents.
-  We repartition by a *seeded* url hash (decorrelates from upstream
-  layout), and mega-documents (payload > ``mega_threshold``) are routed
-  to a dedicated repartition so a handful of giants never serialize
-  behind thousands of small docs in the same task.
+  We repartition by a *seeded* url hash at 2× the partition count
+  (decorrelates from upstream layout; small tasks bound the tail).
 * Column pruning: the plan touches only the columns it needs; metrics
   queries on the sidecar never scan payloads.
 """
@@ -25,15 +28,13 @@ Design notes (SURVEY.md §4, BASELINE north star):
 from __future__ import annotations
 
 import hashlib
-import os
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine.document import parse_document
 from .io_tables import TableIO
+from .megadoc import parse_document_columnar
 from .pdfio.extract import extract_document
 
 # union row schema: record='tx' rows carry transaction fields,
@@ -53,91 +54,9 @@ DOC_COLUMNS = ["url", "bank", "kind", "pages", "n_lines", "n_chars",
                "error", "part_id"]
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Executor-side worker: Arrow batch of pages → union rows."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    part_id = ctx.partitionId() if ctx else -1
-    cols = ["url", "record", "tx_index", "bank", "date", "description",
-            "amount", "direction", "kind", "pages", "n_lines", "n_chars",
-            "blocks_total", "blocks_kept", "tx_count", "text_sha256",
-            "error", "part_id"]
-    for pdf_batch in batches:
-        # columnar accumulation: pd.DataFrame(dict-of-lists) is ~5×
-        # cheaper than list-of-tuples at millions of output rows
-        t_url, t_idx, t_bank = [], [], []
-        t_date, t_desc, t_amt, t_dir = [], [], [], []
-        d_url, d_bank, d_kind, d_pages = [], [], [], []
-        d_lines, d_chars, d_bt, d_bk = [], [], [], []
-        d_txn, d_sha, d_err = [], [], []
-        for row in pdf_batch.itertuples(index=False):
-            url = row.url
-            payload = row.html
-            # pd.notna, not `is not None`: null timestamps arrive as
-            # NaT through Arrow and NaT.year is nan, not an int
-            fallback_year = (
-                row.warc_ts.year if pd.notna(row.warc_ts) else 1970
-            )
-            error = None
-            if payload is not None:
-                doc = extract_document(
-                    bytes(payload) if not isinstance(payload, bytes)
-                    else payload
-                )
-                text, kind, pages, error = (
-                    doc.text, doc.kind, doc.pages, doc.error
-                )
-            else:
-                text, kind, pages = row.text, "text", 1
-            tally: dict = {}
-            try:
-                bank, txs = parse_document(text, fallback_year, tally=tally)
-            except Exception as exc:  # poison doc: metrics row, no txs
-                bank, txs = "error", []
-                error = "%s: %s" % (type(exc).__name__, exc)
-            for i, t in enumerate(txs):
-                t_url.append(url)
-                t_idx.append(i)
-                t_bank.append(bank)
-                t_date.append(t["date"])
-                t_desc.append(t["description"])
-                t_amt.append(t["amount"])
-                t_dir.append(t["direction"])
-            d_url.append(url)
-            d_bank.append(bank)
-            d_kind.append(kind)
-            d_pages.append(pages)
-            d_lines.append(tally.get("n_lines", 0))
-            d_chars.append(len(text) if text else 0)
-            d_bt.append(tally.get("blocks_total", 0))
-            d_bk.append(tally.get("blocks_kept", 0))
-            d_txn.append(len(txs))
-            d_sha.append(
-                hashlib.sha256((text or "").encode("utf-8")).hexdigest())
-            d_err.append(error)
-        n_tx, n_doc = len(t_url), len(d_url)
-        yield pd.DataFrame({
-            "url": t_url, "record": ["tx"] * n_tx, "tx_index": t_idx,
-            "bank": t_bank, "date": t_date, "description": t_desc,
-            "amount": t_amt, "direction": t_dir,
-            "kind": [None] * n_tx, "pages": [None] * n_tx,
-            "n_lines": [None] * n_tx, "n_chars": [None] * n_tx,
-            "blocks_total": [None] * n_tx, "blocks_kept": [None] * n_tx,
-            "tx_count": [None] * n_tx, "text_sha256": [None] * n_tx,
-            "error": [None] * n_tx, "part_id": [None] * n_tx,
-        }, columns=cols)
-        yield pd.DataFrame({
-            "url": d_url, "record": ["doc"] * n_doc,
-            "tx_index": [None] * n_doc, "bank": d_bank,
-            "date": [None] * n_doc, "description": [None] * n_doc,
-            "amount": [None] * n_doc, "direction": [None] * n_doc,
-            "kind": d_kind, "pages": d_pages, "n_lines": d_lines,
-            "n_chars": d_chars, "blocks_total": d_bt, "blocks_kept": d_bk,
-            "tx_count": d_txn, "text_sha256": d_sha, "error": d_err,
-            "part_id": [part_id] * n_doc,
-        }, columns=cols)
-
+# tx rows per output RecordBatch: a giant document's rows leave the
+# worker in slices, so their Arrow copy never exists all at once
+_TX_BATCH_ROWS = 1 << 16
 
 _PA_FIELDS = [
     ("url", "string"), ("record", "string"), ("tx_index", "int32"),
@@ -151,14 +70,13 @@ _PA_FIELDS = [
 
 
 def _parse_arrow_batches(batches):
-    """Arrow-native worker (round 6): same per-document loop as
-    ``_parse_batches`` (the pandas twin, kept for unit/differential
-    tests), but the output rows are assembled as pyarrow RecordBatches
-    directly — ``pa.nulls`` makes the 10 all-null union columns O(1)
-    instead of per-cell object conversion.  Measured: building the
-    bench corpus's output as 18-column pandas frames + Arrow
-    conversion cost ~2.3 s of worker CPU; arrow-native is ~0.28 s
-    (guide §4.2: hand whole batches to native code)."""
+    """The extraction worker: page RecordBatches → union-row
+    RecordBatches (per input batch, its ``tx`` rows in batches of at
+    most ``_TX_BATCH_ROWS``, then one ``doc`` batch).
+    ``parse_document_columnar`` hands each document's transactions
+    back as columns, which extend the output columns directly;
+    ``pa.nulls`` fills the all-null union columns without per-cell
+    conversion (guide §4.2: hand whole batches to native code)."""
     import pyarrow as pa
 
     from pyspark import TaskContext
@@ -191,18 +109,19 @@ def _parse_arrow_batches(batches):
                 text, kind, pages = text0, "text", 1
             tally: dict = {}
             try:
-                bank, txs = parse_document(text, fallback_year, tally=tally)
+                bank, (dates, descs, amounts, dirs) = \
+                    parse_document_columnar(text, fallback_year, tally=tally)
             except Exception as exc:  # poison doc: metrics row, no txs
-                bank, txs = "error", []
+                bank, dates, descs, amounts, dirs = "error", [], [], [], []
                 error = "%s: %s" % (type(exc).__name__, exc)
-            for i, t in enumerate(txs):
-                t_url.append(url)
-                t_idx.append(i)
-                t_bank.append(bank)
-                t_date.append(t["date"])
-                t_desc.append(t["description"])
-                t_amt.append(t["amount"])
-                t_dir.append(t["direction"])
+            n = len(dates)
+            t_url.extend([url] * n)
+            t_idx.extend(range(n))
+            t_bank.extend([bank] * n)
+            t_date.extend(dates)
+            t_desc.extend(descs)
+            t_amt.extend(amounts)
+            t_dir.extend(dirs)
             d_url.append(url)
             d_bank.append(bank)
             d_kind.append(kind)
@@ -211,22 +130,25 @@ def _parse_arrow_batches(batches):
             d_chars.append(len(text) if text else 0)
             d_bt.append(tally.get("blocks_total", 0))
             d_bk.append(tally.get("blocks_kept", 0))
-            d_txn.append(len(txs))
+            d_txn.append(n)
             d_sha.append(
                 hashlib.sha256((text or "").encode("utf-8")).hexdigest())
             d_err.append(error)
         n_tx, n_doc = len(t_url), len(d_url)
-        yield pa.RecordBatch.from_arrays([
-            pa.array(t_url, s), pa.array(["tx"] * n_tx, s),
-            pa.array(t_idx, i32), pa.array(t_bank, s),
-            pa.array(t_date, s), pa.array(t_desc, s),
-            pa.array(t_amt, f64), pa.array(t_dir, s),
-            pa.nulls(n_tx, s), pa.nulls(n_tx, i32),
-            pa.nulls(n_tx, i32), pa.nulls(n_tx, i64),
-            pa.nulls(n_tx, i32), pa.nulls(n_tx, i32),
-            pa.nulls(n_tx, i32), pa.nulls(n_tx, s),
-            pa.nulls(n_tx, s), pa.nulls(n_tx, i32),
-        ], schema=schema)
+        for lo in range(0, n_tx, _TX_BATCH_ROWS):
+            hi = lo + _TX_BATCH_ROWS
+            m = min(hi, n_tx) - lo
+            yield pa.RecordBatch.from_arrays([
+                pa.array(t_url[lo:hi], s), pa.array(["tx"] * m, s),
+                pa.array(t_idx[lo:hi], i32), pa.array(t_bank[lo:hi], s),
+                pa.array(t_date[lo:hi], s), pa.array(t_desc[lo:hi], s),
+                pa.array(t_amt[lo:hi], f64), pa.array(t_dir[lo:hi], s),
+                pa.nulls(m, s), pa.nulls(m, i32),
+                pa.nulls(m, i32), pa.nulls(m, i64),
+                pa.nulls(m, i32), pa.nulls(m, i32),
+                pa.nulls(m, i32), pa.nulls(m, s),
+                pa.nulls(m, s), pa.nulls(m, i32),
+            ], schema=schema)
         yield pa.RecordBatch.from_arrays([
             pa.array(d_url, s), pa.array(["doc"] * n_doc, s),
             pa.nulls(n_doc, i32), pa.array(d_bank, s),
@@ -276,10 +198,9 @@ def parse_pages(
     )
     pruned = pages.select("url", "warc_ts", "html", "text")
     salted = salted_repartition(pruned, partitions, salt_seed)
-    # mapInArrow, not mapInPandas (round 6): the worker builds output
-    # RecordBatches natively — no pandas frame construction and no
-    # per-cell conversion of the union schema's null columns; a test
-    # pins row-identity against the pandas twin (_parse_batches)
+    # mapInArrow (round 6): the worker builds output RecordBatches
+    # natively — no pandas frames, no per-cell conversion of the union
+    # schema's null columns
     return salted.mapInArrow(_parse_arrow_batches, schema=PARSED_SCHEMA)
 
 

@@ -4,7 +4,6 @@ cross-table atomicity, crash invisibility, and the Iceberg plan shape
 
 import os
 
-import pandas as pd
 import pytest
 
 from pdf_parser_spark.io_tables import FORMAT_CONF, TableIO
@@ -129,22 +128,22 @@ def test_format_selected_by_conf(spark, tmp_path):
 
 
 def test_null_warc_ts_falls_back_to_1970():
-    """NaT timestamps (how Arrow delivers null warc_ts) must hit the
-    1970 fallback-year path, not poison the document with nan.year."""
-    from pdf_parser_spark.pipeline import _parse_batches
+    """A null warc_ts (None through Arrow) must hit the 1970
+    fallback-year path, not poison the document."""
+    import pyarrow as pa
 
-    batch = pd.DataFrame({
+    from pdf_parser_spark.pipeline import _parse_arrow_batches
+
+    batch = pa.RecordBatch.from_pydict({
         "url": ["u1"],
-        "warc_ts": [pd.NaT],
-        "html": [None],
+        "warc_ts": pa.array([None], pa.timestamp("us")),
+        "html": pa.array([None], pa.binary()),
         "text": ["chase.com statement\n01/03 Deposit 100.00"],
     })
-    outs = list(_parse_batches(iter([batch])))
-    txs = outs[0]
-    docs = outs[1]
-    assert docs.loc[0, "error"] is None
-    assert docs.loc[0, "bank"] == "chase"
-    assert list(txs["date"]) == ["1970-01-03"]
+    txs, docs = _parse_arrow_batches(iter([batch]))
+    assert docs.column("error").to_pylist() == [None]
+    assert docs.column("bank").to_pylist() == ["chase"]
+    assert txs.column("date").to_pylist() == ["1970-01-03"]
 
 
 def test_compaction_and_time_travel(spark, tmp_path):

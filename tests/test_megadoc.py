@@ -96,11 +96,14 @@ def test_columnar_chunked_equals_whole(bank, header, body_tpl):
                       body_tpl % ((i % 9) + 1))
     text = header + "\n".join(blocks)
 
-    want_bank, want = parse_document(text, 2024)
+    want_tally, got_tally = {}, {}
+    want_bank, want = parse_document(text, 2024, tally=want_tally)
     got_bank, (dates, descs, amounts, dirs) = parse_document_columnar(
-        text, 2024, chunk_lines=97)
+        text, 2024, tally=got_tally, chunk_lines=97)
     assert got_bank == want_bank == bank
     assert len(want) > 700  # chunking definitely engaged
+    # the worker's doc-metric counters come from the chunked path
+    assert got_tally == want_tally
     assert dates == [t["date"] for t in want]
     assert descs == [t["description"] for t in want]
     assert [repr(a) for a in amounts] == [repr(t["amount"]) for t in want]
@@ -113,10 +116,6 @@ def test_columnar_chunked_bofa_relationship_equals_whole():
     section machine must survive split points, including chunks that
     begin inside a CLOSED section (after 'Total …') and glued-line
     markers."""
-    from pdf_parser_spark.engine.banks import parse_bofa_relationship
-    from pdf_parser_spark.engine.direction import finalize_records
-    from pdf_parser_spark.engine.textrules import split_lines
-
     blocks = []
     for i in range(400):
         blocks.append(
@@ -131,12 +130,15 @@ def test_columnar_chunked_bofa_relationship_equals_whole():
             % ((i % 9) + 1, i % 10, i % 100))
     text = "Bank of America Relationship statement 2024\n" + "\n".join(blocks)
 
-    lines = split_lines(text)
-    want = finalize_records(parse_bofa_relationship(lines, 2024))
+    want_tally, got_tally = {}, {}
+    _, want = parse_document(text, 2024, issuer="bofa_relationship",
+                             tally=want_tally)
     got_bank, (dates, descs, amounts, dirs) = parse_document_columnar(
-        text, 2024, issuer="bofa_relationship", chunk_lines=97)
+        text, 2024, tally=got_tally, issuer="bofa_relationship",
+        chunk_lines=97)
     assert got_bank == "bofa_relationship"
     assert len(want) > 300  # chunking engaged, sections exercised
+    assert got_tally == want_tally
     assert dates == [t["date"] for t in want]
     assert descs == [t["description"] for t in want]
     assert [repr(a) for a in amounts] == [repr(t["amount"]) for t in want]
@@ -156,85 +158,50 @@ def test_chunk_spans_cover_and_start_on_dates():
     assert len(spans) > 3
 
 
-def test_parse_pages_mega_equals_parse_pages(spark):
-    """End-to-end: the distributed chunk pipeline over the NORMAL
-    fixture corpus must reproduce parse_pages' transactions (incl.
-    tx_index order) and doc metrics exactly."""
-    from pdf_parser_spark.pages_source import fixture_pages_df
-    from pdf_parser_spark.pipeline import parse_pages, split_outputs
-    from pdf_parser_spark.megadoc import parse_pages_mega
+def test_fold_classifies_direction_on_raw_description():
+    """The columnar fold backfills direction from the RAW description,
+    as finalize_records (reference common.py order) does: the PAYPAL
+    rule needs the trailing space that the strip removes."""
+    from pdf_parser_spark.engine.direction import finalize_records
+    from pdf_parser_spark.megadoc import _Columnar
 
-    pages = fixture_pages_df(spark)
-    want_tx, want_docs = split_outputs(parse_pages(pages))
-    got_tx, got_docs = parse_pages_mega(pages)
-
-    key = lambda r: (r.url, r.tx_index)
-    want_rows = sorted(((r.url, r.tx_index, r.bank, r.date,
-                         r.description, repr(r.amount), r.direction)
-                        for r in want_tx.collect()))
-    got_rows = sorted(((r.url, r.tx_index, r.bank, r.date,
-                        r.description, repr(r.amount), r.direction)
-                       for r in got_tx.collect()))
-    assert got_rows == want_rows
-
-    dcols = ("url", "bank", "kind", "pages", "n_lines", "n_chars",
-             "blocks_total", "blocks_kept", "tx_count", "text_sha256",
-             "error")
-    want_d = sorted(tuple(getattr(r, c) for c in dcols)
-                    for r in want_docs.collect())
-    got_d = sorted(tuple(getattr(r, c) for c in dcols)
-                   for r in got_docs.collect())
-    assert got_d == want_d
-
-    from pdf_parser_spark.megadoc import release_mega_cache
-    release_mega_cache()
-
-
-def test_mega_doc_explodes_into_many_tasks(spark):
-    """A multi-chunk giant actually fans out: its chunk rows exceed 4
-    and the reassembled transactions equal the engine run whole."""
-    from pdf_parser_spark.megadoc import _phase1, CHUNK_SCHEMA
-    from pdf_parser_spark.megadoc import parse_pages_mega
-    from pdf_parser_spark.fixtures import mega_statement_text
-
-    text = mega_statement_text(2)  # ~34k lines
-    pages = spark.createDataFrame(
-        [("https://mega.test/x", None, None, text, "en")],
-        "url string, warc_ts timestamp, html binary, text string,"
-        " lang string")
-    chunks = pages.select("url", "warc_ts", "html", "text") \
-        .mapInPandas(_phase1, schema=CHUNK_SCHEMA)
-    n_chunks = chunks.filter("chunk_no >= 0").count()
-    assert n_chunks == 1  # 34k lines < default chunk; now force chunks
-
-    import pdf_parser_spark.megadoc as M
-    old = M.DEFAULT_CHUNK_LINES
-    M.DEFAULT_CHUNK_LINES = 5000
-    try:
-        txs, docs = parse_pages_mega(pages)
-        got = [(r.tx_index, r.date, r.description, repr(r.amount),
-                r.direction) for r in txs.collect()]
-        got.sort()
-        _, want = parse_document(text, 1970)
-        wantt = sorted((i, t["date"], t["description"], repr(t["amount"]),
-                        t["direction"]) for i, t in enumerate(want))
-        assert got == wantt
-        d = docs.collect()[0]
-        assert d.bank == "chase" and d.tx_count == len(want)
-    finally:
-        M.DEFAULT_CHUNK_LINES = old
-        M.release_mega_cache()
+    raw = [{"date": "2024-01-03", "description": "ACME PAYPAL ",
+            "amount": -12.5}]
+    want = finalize_records(raw)
+    fold = _Columnar()
+    fold.extend_raw(raw)
+    dates, descs, amounts, dirs = fold.finalized()
+    got = [{"date": d, "description": s, "amount": a, "direction": r}
+           for d, s, a, r in zip(dates, descs, amounts, dirs)]
+    assert got == want
+    assert dirs == ["out"]
 
 
 _RSS_CHILD = r"""
-import json, resource, sys
+import datetime, json, resource, sys
 sys.path.insert(0, %(repo)r)
+# every mode loads what the worker process loads (pyarrow, the
+# pipeline), so the three runs share one interpreter baseline and the
+# RSS difference is the parse path's own
+import pyarrow as pa
+from pdf_parser_spark.pipeline import _parse_arrow_batches
 from pdf_parser_spark.fixtures import mega_statement_text
 text = mega_statement_text(24)
-if %(columnar)d:
+mode = %(mode)r
+if mode == "columnar":
     from pdf_parser_spark.megadoc import parse_document_columnar
     bank, cols = parse_document_columnar(text, 2024)
     n = len(cols[0])
+elif mode == "worker":
+    batch = pa.RecordBatch.from_pydict({
+        "url": ["https://mega.test/x"],
+        "warc_ts": pa.array([datetime.datetime(2024, 1, 1)],
+                            pa.timestamp("us")),
+        "html": pa.array([None], pa.binary()),
+        "text": [text]})
+    del text  # the worker's only input is the batch
+    n = sum(b.num_rows for b in _parse_arrow_batches(iter([batch]))
+            if b.column(1)[0].as_py() == "tx")
 else:
     from pdf_parser_spark.engine.document import parse_document
     bank, txs = parse_document(text, 2024)
@@ -245,19 +212,21 @@ print(json.dumps({"n": n,
 
 
 def test_columnar_bounds_worker_memory():
-    """The columnar fold must hold a 24 MB document under the
-    whole-document path's RSS — the linear extrapolation that keeps a
-    512 MB doc inside a 4 GB worker (BENCH/MEGADOC.md has the measured
-    curve)."""
-    def run(columnar):
+    """The columnar fold — and the production worker, which parses
+    through it — must hold a 24 MB document under the whole-document
+    path's RSS: the linear extrapolation that keeps a 512 MB doc inside
+    a 4 GB worker (BENCH/MEGADOC.md has the measured curve)."""
+    def run(mode):
         out = subprocess.run(
             [sys.executable, "-c",
-             _RSS_CHILD % {"repo": REPO, "columnar": columnar}],
+             _RSS_CHILD % {"repo": REPO, "mode": mode}],
             capture_output=True, text=True, check=True)
         return json.loads(out.stdout.strip().splitlines()[-1])
 
-    whole = run(0)
-    col = run(1)
-    assert col["n"] == whole["n"] > 100_000
+    whole = run("whole")
+    col = run("columnar")
+    worker = run("worker")
+    assert col["n"] == worker["n"] == whole["n"] > 100_000
     assert col["rss"] < whole["rss"], (col, whole)
+    assert worker["rss"] < whole["rss"], (worker, whole)
     assert col["rss"] < 1024, col  # 24 MB doc ≪ 1 GB worker share

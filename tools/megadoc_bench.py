@@ -1,9 +1,8 @@
 """Worst-case-document bound (SURVEY §4 / round-2 verdict ask #3):
 measure (a) the whole-document engine path's linear RSS/wall curve —
 which locates the 4 GB-worker knee, (b) the columnar chunked path
-(megadoc.parse_document_columnar) at 512 MB, (c) the distributed chunk
-pipeline (megadoc.parse_pages_mega) at 512 MB with per-task stats from
-the Spark REST API.  Results → BENCH/MEGADOC.md.
+(megadoc.parse_document_columnar, which the pipeline worker runs for
+every document) at 512 MB.  Results → BENCH/MEGADOC.md.
 
 Usage: python tools/megadoc_bench.py [mb] [out_md]
 """
@@ -52,65 +51,6 @@ def engine_phase(mb: int, columnar: bool = False) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def distributed_phase(mb: int) -> dict:
-    """parse_pages_mega over one ``mb``-MB text document + the normal
-    corpus; task stats from the REST API."""
-    import urllib.request
-
-    from pdf_parser_spark.fixtures import mega_statement_text
-    from pdf_parser_spark.megadoc import parse_pages_mega
-    from pdf_parser_spark.pages_source import fixture_pages_df
-    from pdf_parser_spark.session import get_spark
-
-    spark = get_spark(app="megadoc-dist", cores=16, shuffle_partitions=16,
-                      extra_conf={"spark.ui.enabled": "true"})
-    spark.conf.set(
-        "spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
-    spark.sparkContext.setLogLevel("ERROR")
-    mega = spark.createDataFrame(
-        [("https://mega.test/doc0", None, None,
-          mega_statement_text(mb), "en")],
-        "url string, warc_ts timestamp, html binary, text string,"
-        " lang string")
-    pages = fixture_pages_df(spark).unionByName(mega)
-
-    t0 = time.time()
-    txs, docs = parse_pages_mega(pages)
-    n_tx = txs.count()
-    doc_rows = docs.collect()
-    wall = time.time() - t0
-    from pdf_parser_spark.megadoc import release_mega_cache
-    release_mega_cache()
-    mega_row = [r for r in doc_rows if r.url.startswith("https://mega")][0]
-
-    durs = []
-    try:
-        ui = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-                "%s/api/v1/applications/%s/stages?status=complete"
-                % (ui, app_id)) as resp:
-            stages = json.loads(resp.read())
-        stage = max(stages, key=lambda s: s.get("executorRunTime", 0))
-        with urllib.request.urlopen(
-                "%s/api/v1/applications/%s/stages/%d/%d/taskList"
-                "?length=2000" % (ui, app_id, stage["stageId"],
-                                  stage["attemptId"])) as resp:
-            tasks = json.loads(resp.read())
-        durs = sorted(t["duration"] / 1000.0 for t in tasks)
-    except Exception as exc:
-        print("REST API unavailable: %s" % exc, file=sys.stderr)
-    spark.stop()
-    med = durs[len(durs) // 2] if durs else None
-    return {"job_wall_s": round(wall, 1), "n_tx": n_tx,
-            "mega_txs": mega_row.tx_count, "mega_error": mega_row.error,
-            "task_median_s": round(med, 2) if durs else None,
-            "task_max_s": round(durs[-1], 2) if durs else None,
-            "straggler_ratio": (round(durs[-1] / med, 1)
-                                if durs and med else None),
-            "n_tasks": len(durs)}
-
-
 def main(mb: int = 512, out_md: str = "BENCH/MEGADOC.md") -> None:
     # each phase is expensive (minutes): cache raw results so a crash
     # or interrupt resumes instead of re-measuring everything
@@ -136,7 +76,6 @@ def main(mb: int = 512, out_md: str = "BENCH/MEGADOC.md") -> None:
 
     col = cached("columnar_%d" % mb,
                  lambda: engine_phase(mb, columnar=True))
-    dist = cached("dist_%d" % mb, lambda: distributed_phase(mb))
 
     rows = "\n".join(
         "| %d | %d | %.0f | %.0f |" % (c["mb"], c["txs"],
@@ -146,7 +85,8 @@ def main(mb: int = 512, out_md: str = "BENCH/MEGADOC.md") -> None:
         fh.write("""# Worst-case document bound (round 3)
 
 Synthetic chase-shaped statements (fixtures.mega_statement_text);
-"whole" = the unmodified engine path one worker runs.
+"whole" = the whole-document engine path (engine.document.parse_document,
+the reference the chunked path is pinned against).
 
 ## Whole-document path: linear in document size
 
@@ -167,33 +107,18 @@ open question, now measured.
   (provably exact for the sweep family + chase/truist; equivalence is
   test-pinned at aggressive chunk sizes, tests/test_megadoc.py).
 
-## Distributed chunk pipeline (megadoc.parse_pages_mega), %(mb)d MB + normal corpus
-
-* job wall %(job_wall_s)s s for %(n_tx)d transactions
-  (mega doc: %(mega_txs)s txs, error=%(mega_error)s)
-* parse-stage tasks: %(n_tasks)s; median %(task_median_s)s s,
-  max %(task_max_s)s s → straggler ratio **%(straggler_ratio)s×**
-  (the whole-doc path's straggler at this size would be the full
-  ~%(whole512).0f s single task — the chunk explosion converts the
-  stall into ordinary tasks)
-* text extraction of ONE payload stays sequential (a single PDF's
-  byte stream has no parallel structure in our tokenizer); the chunk
-  explosion distributes the PARSE, which dominates the fit above.
-
 ## Deployment rule
 
-Route payloads above ~64 MB through parse_pages_mega; below it the
-single-shuffle parse_pages path is strictly cheaper (no second
-shuffle).  wf/bofa/citi mega-documents fall back to the whole path
-(state does not decompose at split points) — their documented bound is
-the ~%(knee).0f MB knee.
+There is one extraction worker (pipeline._parse_arrow_batches) and it
+parses every document through parse_document_columnar, which chunks
+automatically above megadoc.DEFAULT_CHUNK_LINES decoded lines.  No
+document is routed by hand; one giant document parses inside one task
+(memory bounded as above, wall time not).
 """ % {"rows": rows, "intercept": intercept, "slope": slope,
             "knee": knee_mb, "rss512": (intercept + slope * 512) / 1024,
             "mb": mb, "col_txs": col["txs"],
             "col_wall": col["t_parse_s"], "col_rss": col["peak_rss_mb"],
-            "col_head": 4096 / col["peak_rss_mb"],
-            "whole512": curve[-1]["t_parse_s"] * 512 / curve[-1]["mb"],
-            **dist})
+            "col_head": 4096 / col["peak_rss_mb"]})
     print("wrote", out_md)
 
 

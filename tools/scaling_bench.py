@@ -59,8 +59,9 @@ _MP_CHILD = r"""
 import json, multiprocessing as mp, os, sys, time
 sys.path.insert(0, "%(repo)s")
 from pdf_parser_spark.pages_source import fixture_pages_rows
-from pdf_parser_spark.pipeline import _parse_batches
+from pdf_parser_spark.pipeline import _parse_arrow_batches
 import pandas as pd
+import pyarrow as pa
 
 cpus = int(sys.argv[1]); repeat = int(sys.argv[2])
 rows = fixture_pages_rows(repeat=repeat)
@@ -69,7 +70,9 @@ frames = [pd.DataFrame([r[:4] for r in rows[i::cpus * 4]], columns=cols)
           for i in range(cpus * 4)]
 
 def work(frame):
-    return sum(len(out) for out in _parse_batches(iter([frame])))
+    batch = pa.RecordBatch.from_pandas(frame)
+    return sum(out.num_rows
+               for out in _parse_arrow_batches(iter([batch])))
 
 with mp.Pool(cpus) as pool:
     pool.map(work, frames[:cpus])  # warm
